@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Iterative connected components in DataFrame joins — the alternating
-  * large-star / small-star algorithm ("Finding connected components in
-  * map-reduce in logarithmic rounds", ICDE 2013; PAPERS.md). Replaces the
+  * large-star / small-star algorithm of Kiveris et al., "Connected
+  * Components in MapReduce and Beyond" (SoCC 2014); "Finding connected
+  * components in map-reduce in logarithmic rounds" (ICDE 2013, PAPERS.md),
+  * which analyses Hash-to-Min, is background. Replaces the
   * reference's in-memory BFS flood fill
   * (/root/reference/src/graph/undirected_graph.rs:346-380) with an
   * O(log² n)-round shuffle algorithm that survives planet-scale inputs.

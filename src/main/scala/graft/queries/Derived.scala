@@ -104,13 +104,13 @@ object Derived {
           |), (k, x) -> x IS NOT NULL) AS tags""".stripMargin.replace("\n", " "),
         "o_orderdate AS ts")
 
-  /** Canonical undirected edge set (src < dst, distinct) — memoised per
-    * dir: ~15 graph queries re-derived this identical union+distinct
-    * shuffle from parquet every time (guide §2.4). First caller in a rep
-    * computes it from the parquet inputs; Bench clears the memo per rep.
+  /** Canonical undirected edge set (src < dst, distinct) — cached per
+    * dir in [[FrameCache]]: ~15 graph queries re-derived this identical
+    * union+distinct shuffle from parquet every time (guide §2.4). First
+    * caller in a rep computes it from the parquet inputs.
     */
   def edgesDF(spark: SparkSession, dir: String): DataFrame =
-    memoize(s"edges:$dir") {
+    FrameCache(spark, s"edges:$dir") {
       // one scan: explode both way segments instead of a self-union that
       // read the parquet twice (same row set — the union was positional)
       waysDF(spark, dir)
@@ -118,17 +118,18 @@ object Derived {
           "explode(array(struct(nids[0] AS u, nids[1] AS v), " +
             "struct(nids[1] AS u, nids[2] AS v))) AS e")
         .selectExpr("LEAST(e.u, e.v) AS src", "GREATEST(e.u, e.v) AS dst")
-        .distinct()
+        .distinct().localCheckpoint(true)
     }
 
-  /** Node positions for every node referenced by an edge (memoised). */
+  /** Node positions for every node referenced by an edge (cached). */
   def nodesDF(spark: SparkSession, dir: String): DataFrame =
-    memoize(s"nodes:$dir") {
+    FrameCache(spark, s"nodes:$dir") {
       // one pass over the edges checkpoint (the union read it twice)
       edgesDF(spark, dir)
         .select(explode(array(col("src"), col("dst"))).as("nid"))
         .distinct()
         .selectExpr("nid", s"${latSql("nid")} AS lat", s"${lonSql("nid")} AS lon")
+        .localCheckpoint(true)
     }
 
   /** DAG orientation: every canonical edge flows low nid → high nid, with
@@ -160,37 +161,20 @@ object Derived {
        |  )
        |)""".stripMargin.replace("\n", " ")
 
-  // ---- cross-query memo (Verify/Bench run every query against the same
-  // dir; iterative results are expensive and identical) -----------------
-
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  def memoize(key: String)(f: => DataFrame): DataFrame =
-    memo.computeIfAbsent(key, _ => f.localCheckpoint(true))
-
-  /** [[memoize]] for frames the builder already materialized (its own
-    * localCheckpoint) — no second checkpoint copy. */
-  def memoizeRaw(key: String)(f: => DataFrame): DataFrame =
-    memo.computeIfAbsent(key, _ => f)
-
   /** The cell-indexed node frame the kNN queries search (q22, q36) —
     * built and checkpointed once per (res, dir) via
     * [[graft.geo.SpatialJoins.cellIndexedNodes]]. */
   def nodesCellMemo(spark: SparkSession, dir: String, res: Int): DataFrame =
-    memoizeRaw(s"nodescell:$res:$dir") {
+    FrameCache(spark, s"nodescell:$res:$dir") {
       graft.geo.SpatialJoins.cellIndexedNodes(nodesDF(spark, dir), res)
     }
 
-  /** Drop every memoised frame (Bench calls this between reps so each
-    * rep pays the full iterative cost instead of reusing warm caches).
-    * Also drops the shared stream staging dir for the same reason —
-    * every rep re-stages the quartile files once.
-    */
-  def clearMemo(): Unit = {
-    memo.clear()
-    QueriesStream.clearStaging()
-  }
+  /** Release the [[FrameCache]] (Bench calls this between reps so each
+    * rep pays the full iterative cost instead of reusing warm caches). */
+  def clearMemo(): Unit = FrameCache.release()
 
-  /** Equal-split upstream over the DAG: (nodeUpstream, edgeFlow) memoised.
+  /** Equal-split upstream over the DAG: (nodeUpstream, edgeFlow), cached
+    * as one entry.
     *
     * Hybrid engine (Flow.upstreamFlowHybrid): components under the size
     * threshold run the exact local Kahn walk in one shuffle instead of
@@ -199,42 +183,42 @@ object Derived {
     * labels it needs are exactly the memoised [[QueriesGraph.ccLabels]]
     * (the DAG orientation is over the same canonical undirected edges).
     */
-  def dagUpstreamNodes(spark: SparkSession, dir: String): DataFrame =
-    memoize(s"upnodes:$dir") {
+  private def dagUpstream(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    FrameCache(spark, s"upstream:$dir") {
       val r = graft.graph.Flow.upstreamFlowHybrid(
         dagEdgesDF(spark, dir)
           .withColumn("tag", lit(null).cast("string")),
         labels = Some(QueriesGraph.ccLabels(spark, dir)))
-      memo.put(s"upflows:$dir", r.edgeFlow.localCheckpoint(true))
-      r.nodeUpstream
+      val flows = r.edgeFlow.localCheckpoint(true)
+      (r.nodeUpstream.localCheckpoint(true), flows)
     }
-  def dagUpstreamFlows(spark: SparkSession, dir: String): DataFrame = {
-    dagUpstreamNodes(spark, dir) // ensure both entries exist
-    memo.get(s"upflows:$dir")
-  }
+  def dagUpstreamNodes(spark: SparkSession, dir: String): DataFrame =
+    dagUpstream(spark, dir)._1
+  def dagUpstreamFlows(spark: SparkSession, dir: String): DataFrame =
+    dagUpstream(spark, dir)._2
 
-  /** SCC of the cyclic orientation, memoised. The weak-CC pass reuses the
+  /** SCC of the cyclic orientation, cached. The weak-CC pass reuses the
     * memoised [[QueriesGraph.ccLabels]]: the cyclic orientation adds only
     * closing edges WITHIN a way (nc→na), so its undirected components —
     * and hence the min-nid labels — equal the canonical edge set's.
     */
   def sccCyclic(spark: SparkSession, dir: String): DataFrame =
-    memoize(s"scc:$dir") {
+    FrameCache(spark, s"scc:$dir") {
       graft.graph.Scc.run(cyclicEdgesDF(spark, dir).select("src", "dst"),
-        weakLabels = Some(QueriesGraph.ccLabels(spark, dir)))
+        weakLabels = Some(QueriesGraph.ccLabels(spark, dir))).localCheckpoint(true)
     }
 
-  /** Tag-group CC over the canonical edges with the parity tag, memoised.
+  /** Tag-group CC over the canonical edges with the parity tag, cached.
     * Passes the memoised weak-CC labels (same canonical edge set), so the
     * hybrid engine localises small components to one shuffle instead of
     * re-running the iterative composite CC.
     */
   def tagGroupTagged(spark: SparkSession, dir: String): DataFrame =
-    memoize(s"tgcc:$dir") {
+    FrameCache(spark, s"tgcc:$dir") {
       graft.graph.DownOps.tagGroupCC(edgesDF(spark, dir)
         .selectExpr("src", "dst",
           "CASE WHEN (src + dst) % 2 = 0 THEN 'a' ELSE 'b' END AS tag"),
-        weakLabels = Some(QueriesGraph.ccLabels(spark, dir)))
+        weakLabels = Some(QueriesGraph.ccLabels(spark, dir))).localCheckpoint(true)
     }
 
   /** Biggest-end assignment over the DAG with DECIMETRE-integerised end
@@ -245,7 +229,7 @@ object Derived {
     * fixpoint), zero driver rounds.
     */
   def dagEndAssignmentDm(spark: SparkSession, dir: String): DataFrame =
-    memoize(s"assigndm:$dir") {
+    FrameCache(spark, s"assigndm:$dir") {
       val dag = dagEdgesDF(spark, dir)
       val up = dagUpstreamNodes(spark, dir)
         .select(col("nid"),
@@ -253,7 +237,7 @@ object Derived {
             .as("upstream_m"))
       val ends = graft.graph.Flow.endPoints(dag).join(up, Seq("nid"))
       graft.graph.Flow.biggestEndAssignmentHybrid(dag.select("src", "dst"),
-        ends, labels = Some(QueriesGraph.ccLabels(spark, dir)))
+        ends, labels = Some(QueriesGraph.ccLabels(spark, dir))).localCheckpoint(true)
     }
 
   /** Deterministic query points derived from customer (1 in 3). */

@@ -128,12 +128,13 @@ object QueriesExtras {
       s: SparkSession, d: String, sizeThreshold: Long): DataFrame = {
       val labels = QueriesGraph.ccLabels(s, d)
       // posOk is threshold-independent — q45 and q120 share one copy
-      val posOk = Derived.memoize(s"posok:$d") {
+      val posOk = FrameCache(s, s"posok:$d") {
         labels.join(nodesDF(s, d), Seq("nid"))
           .groupBy("comp").agg(
             count(lit(1)).as("n_nodes"),
             countDistinct(col("lat"), col("lon")).as("n_pos"))
           .filter(col("n_pos") === col("n_nodes")).select("comp")
+          .localCheckpoint(true)
       }
       val bres = Extras.betweenness(edgesDF(s, d), nodesDF(s, d), s,
           sizeThreshold = sizeThreshold,

@@ -108,9 +108,6 @@ object QueriesGraph {
     // distinct node/position sums read from the coords arrays.
     "q119_sharded_geom_cover" -> ((s, d) => shardedGeomDigest(s, d, 1L)))
 
-  /** The q119 digest over [[graft.pipeline.LumpWays.features]] lines at a
-    * given shard threshold — peel-invariant by construction, so the spec
-    * cross-checks threshold=1 ≡ threshold=MaxValue (sharded ≡ exact). */
   /** The shared steps 1-7 of the q35/q119 lump runs — threshold-
     * independent by construction ([[graft.pipeline.LumpWays.Stages]]),
     * so the gate pair derives census/contraction/CC/ranks ONCE per rep
@@ -119,16 +116,16 @@ object QueriesGraph {
     */
   private def lumpStages(
       s: SparkSession, d: String): graft.pipeline.LumpWays.Stages =
-    stagesMemo.computeIfAbsent(s"lumpstages:$d", _ => {
+    FrameCache(s, s"lumpstages:$d") {
       val cfg = graft.pipeline.LumpWays.Config(
         tagFilters = Seq(graft.tagfilter.TagFilter.unsafeParse("status")),
         groupKeys = Seq(Seq("status")))
       graft.pipeline.LumpWays.preludeStages(waysDF(s, d), nodesDF(s, d), cfg, s)
-    })
+    }
 
-  private val stagesMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.pipeline.LumpWays.Stages]()
-
+  /** The q119 digest over [[graft.pipeline.LumpWays.features]] lines at a
+    * given shard threshold — peel-invariant by construction, so the spec
+    * cross-checks threshold=1 ≡ threshold=MaxValue (sharded ≡ exact). */
   private[graft] def shardedGeomDigest(
       s: SparkSession, d: String, threshold: Long): DataFrame = {
       val cfg = graft.pipeline.LumpWays.Config(
@@ -185,41 +182,35 @@ object QueriesGraph {
           "seg_p_sum", "seg_q_sum", "nid_cnt", "lat_dm_sum", "lon_dm_sum")
   }
 
-  /** Memo for results shared across queries in one JVM (Verify/Bench run
-    * every query against the same dir — CC would otherwise re-run 5×).
-    * Cached frames are localCheckpoint'd, so they are lineage-free.
-    */
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def memoize(key: String)(f: => DataFrame): DataFrame =
-    memo.computeIfAbsent(key, _ => f.localCheckpoint(true))
+  /** Release the [[FrameCache]] (Bench calls this between reps). */
+  def clearMemo(): Unit = FrameCache.release()
 
-  /** Drop every memoised frame (Bench calls this between reps). */
-  def clearMemo(): Unit = { memo.clear(); stagesMemo.clear() }
-
+  /** CC labels, cached: Verify/Bench run every query against the same
+    * dir, and CC would otherwise re-run 5× per rep. */
   def ccLabels(s: SparkSession, d: String): DataFrame =
-    memoize(s"cc:$d") {
+    FrameCache(s, s"cc:$d") {
       // edgesDF is already canonical-distinct — skip CC's intake shuffle
       ConnectedComponents.run(edgesDF(s, d), assumeDistinct = true).labels
+        .localCheckpoint(true)
     }
 
   /** Shared: per-component integerised lengths. */
   def compLengths(s: SparkSession, d: String): DataFrame =
-    memoize(s"complen:$d") { compLengthsUncached(s, d) }
-
-  private def compLengthsUncached(s: SparkSession, d: String): DataFrame = {
-    val labels = ccLabels(s, d)
-    val nodes = nodesDF(s, d)
-    edgesDF(s, d)
-      .join(labels.withColumnRenamed("nid", "src"), Seq("src"))
-      .join(nodes.select(col("nid").as("src"), col("lat").as("lat1"),
-        col("lon").as("lon1")), Seq("src"))
-      .join(nodes.select(col("nid").as("dst"), col("lat").as("lat2"),
-        col("lon").as("lon2")), Seq("dst"))
-      .withColumn("hv",
-        Geo.haversineM(col("lat1"), col("lon1"), col("lat2"), col("lon2")))
-      .groupBy("comp")
-      .agg(expr(dmSql("SUM(hv)")).as("len_dm"), count(lit(1)).as("n_edges"))
-  }
+    FrameCache(s, s"complen:$d") {
+      val labels = ccLabels(s, d)
+      val nodes = nodesDF(s, d)
+      edgesDF(s, d)
+        .join(labels.withColumnRenamed("nid", "src"), Seq("src"))
+        .join(nodes.select(col("nid").as("src"), col("lat").as("lat1"),
+          col("lon").as("lon1")), Seq("src"))
+        .join(nodes.select(col("nid").as("dst"), col("lat").as("lat2"),
+          col("lon").as("lon2")), Seq("dst"))
+        .withColumn("hv",
+          Geo.haversineM(col("lat1"), col("lon1"), col("lat2"), col("lon2")))
+        .groupBy("comp")
+        .agg(expr(dmSql("SUM(hv)")).as("len_dm"), count(lit(1)).as("n_edges"))
+        .localCheckpoint(true)
+    }
 
   private val ccCte =
     s"""sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),

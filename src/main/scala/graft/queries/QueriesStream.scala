@@ -16,18 +16,19 @@ object QueriesStream {
   /** Split `ev` (must carry a `tus` epoch-micros column) into four
     * time-ranged parquet files — exact time quartiles — staged in one
     * directory with ascending mod-times, so the file stream source
-    * replays them in time order, one per micro-batch.
+    * replays them in time order, one per micro-batch. Every dir it makes
+    * is a [[FrameCache.tempDir]], deleted when the cache is released.
     */
   private def stageQuartileFiles(ev: DataFrame, tag: String): String = {
     val qs = ev.selectExpr("percentile(tus, array(0.25, 0.5, 0.75)) AS q")
       .head().getAs[collection.Seq[Double]](0).map(_.toLong)
-    val dir = java.nio.file.Files.createTempDirectory(s"${tag}_events")
+    val dir = FrameCache.tempDir(s"${tag}_events")
     // ONE partitioned write instead of four filtered scans+writes (the
     // staging cost ran 5 jobs over ev per stream query). Row-set per
     // file is identical to the filtered form; every consumer here is
     // row-order-insensitive (aggregations, keyed state that sorts its
     // own group, set-valued joins/dedup), so in-file order is free.
-    val stage = java.nio.file.Files.createTempDirectory(s"${tag}_stage")
+    val stage = FrameCache.tempDir(s"${tag}_stage")
     ev.withColumn("__q",
         when(col("tus") <= qs(0), 0).when(col("tus") <= qs(1), 1)
           .when(col("tus") <= qs(2), 2).otherwise(3))
@@ -47,7 +48,7 @@ object QueriesStream {
         case None =>
           // an empty quartile (heavy timestamp ties) must still stage a
           // file: the batch count fixes the state-transition boundaries
-          val part = java.nio.file.Files.createTempDirectory(s"${tag}_empty$i")
+          val part = FrameCache.tempDir(s"${tag}_empty$i")
           ev.limit(0).coalesce(1).write.mode("overwrite").parquet(part.toString)
           val src = java.nio.file.Files.list(part).toArray.map(_.toString)
             .filter(_.endsWith(".parquet")).head
@@ -66,17 +67,11 @@ object QueriesStream {
     * redundant full passes + checkpoints per rep). Quartile boundaries
     * and per-file row sets are unchanged, so batch boundaries, state
     * transitions and every output row are identical; each stream
-    * projects its own columns after `readStream`. Keyed by input dir;
-    * [[Derived.clearMemo]] drops it between bench reps so every rep
-    * pays the staging exactly once.
+    * projects its own columns after `readStream`. Cached per input dir
+    * in [[FrameCache]], so every bench rep pays the staging exactly once.
     */
-  private val stagedShared =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[queries] def clearStaging(): Unit = stagedShared.clear()
-
   private def sharedQuartileDir(s: SparkSession, d: String): String =
-    stagedShared.computeIfAbsent(d, _ => {
+    FrameCache(s, s"sharedq:$d") {
       val ev = s.read.parquet(s"$d/events.parquet")
         .select(col("user_id").cast("long").as("user_id"),
           col("event_id").cast("long").as("event_id"),
@@ -86,61 +81,75 @@ object QueriesStream {
         // two consumers (percentile probe + partitioned write): one scan
         .localCheckpoint(true)
       stageQuartileFiles(ev, "sharedq")
-    })
+    }
 
-  /** Start-and-drain a bounded stateful stream with a SMALL
-    * state-partition count and a tmpfs checkpoint, then return the
-    * materialized memory-sink table. Stateful operators commit
+  /** The shared quartile files replayed one file per micro-batch. */
+  private def quartileStream(s: SparkSession, d: String): DataFrame = {
+    val dir = sharedQuartileDir(s, d)
+    s.readStream.schema(s.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
+  }
+
+  /** Start-and-drain `stream` into a memory sink (output mode `mode`) with
+    * a SMALL state-partition count and a tmpfs checkpoint, then return the
+    * materialized sink table. Stateful operators commit
     * shufflePartitions × store-instances files every micro-batch, so the
     * session default (32) is pure overhead on these bounded small-state
     * replays — q79 measured 20.9 s → 6.6 s min-of-2 at sf0.1 from this
-    * alone. `build` receives the checkpoint dir and must `.start()` the
-    * query inside the callback (partition count is captured at start).
+    * alone (the partition count is captured when the query starts).
+    * The checkpoint dir and the sink's temp view (the sink holds every
+    * row in driver memory) are dropped once the result is materialized.
     */
-  private def runSmallStateStream(s: SparkSession, sinkName: String)(
-      build: String => org.apache.spark.sql.streaming.StreamingQuery): DataFrame = {
+  private def runSmallStateStream(s: SparkSession, tag: String, mode: String)(
+      stream: DataFrame): DataFrame = {
+    counter += 1
+    val sinkName = s"${tag}_sink_$counter"
     val base =
       if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else "/tmp"
     val ckpt = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(base), s"${sinkName}_ckpt").toString
+      java.nio.file.Paths.get(base), s"${sinkName}_ckpt")
     val prevSp = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", "4")
     try {
-      val q = build(ckpt)
+      val q = stream.writeStream
+        .outputMode(mode)
+        .format("memory")
+        .option("checkpointLocation", ckpt.toString)
+        .queryName(sinkName)
+        .start()
       q.processAllAvailable()
       q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-    s.table(sinkName).localCheckpoint(true)
+      s.table(sinkName).localCheckpoint(true)
+    } finally {
+      s.conf.set("spark.sql.shuffle.partitions", prevSp)
+      s.catalog.dropTempView(sinkName)
+      FrameCache.deleteTree(ckpt)
+    }
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q34_stream_window" -> ((s, d) => {
       val path = s"$d/events.parquet"
       val schema = s.read.parquet(path).schema
-      counter += 1
-      val sinkName = s"q34_sink_$counter"
       // FileStreamSource wants a directory: stage a symlink to the file
+      // (deleted afterwards — the link only, never its target)
       val dir = java.nio.file.Files.createTempDirectory("q34_events")
-      java.nio.file.Files.createSymbolicLink(
-        dir.resolve("events.parquet"), java.nio.file.Paths.get(path))
-      // small-state run (the q79 fix): the complete-mode agg state store
-      // commits session-partition-count files per batch otherwise
-      runSmallStateStream(s, sinkName) { ckpt =>
-        s.readStream
-          .schema(schema)
-          .parquet(dir.toString)
-          .groupBy(window(col("ts"), "300 seconds"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(expr(QueriesRelational.centsSql("value"))).as("sum_cents"))
-          .select(unix_micros(col("window.start").cast("timestamp")).as("bucket_us"),
-            col("event_type"), col("n"), col("sum_cents"))
-          .writeStream
-          .outputMode("complete")
-          .format("memory")
-          .option("checkpointLocation", ckpt)
-          .queryName(sinkName)
-          .start()
-      }
+      try {
+        java.nio.file.Files.createSymbolicLink(
+          dir.resolve("events.parquet"), java.nio.file.Paths.get(path))
+        // small-state run (the q79 fix): the complete-mode agg state store
+        // commits session-partition-count files per batch otherwise
+        runSmallStateStream(s, "q34", "complete") {
+          s.readStream
+            .schema(schema)
+            .parquet(dir.toString)
+            .groupBy(window(col("ts"), "300 seconds"), col("event_type"))
+            .agg(count(lit(1)).as("n"),
+              sum(expr(QueriesRelational.centsSql("value"))).as("sum_cents"))
+            .select(unix_micros(col("window.start").cast("timestamp")).as("bucket_us"),
+              col("event_type"), col("n"), col("sum_cents"))
+        }
+      } finally FrameCache.deleteTree(dir)
     }),
 
     // watermarked APPEND-mode windowed aggregation — the third streaming
@@ -152,16 +161,9 @@ object QueriesStream {
     // symmetrically (bucket end ≤ final watermark = max ts − 10 min).
     // Deterministic: the quartile files fix the batch boundaries, and
     // watermark progression is a pure function of per-batch max ts.
-    "q62_stream_late" -> ((s, d) => {
-      val dir = sharedQuartileDir(s, d)
-      val schema = s.read.parquet(dir).schema
-      counter += 1
-      val sinkName = s"q62_sink_$counter"
-      runSmallStateStream(s, sinkName) { ckpt =>
-        s.readStream
-          .schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(dir)
+    "q62_stream_late" -> ((s, d) =>
+      runSmallStateStream(s, "q62", "append") {
+        quartileStream(s, d)
           .select("event_type", "tus", "cents")
           .withColumn("ets", timestamp_micros(col("tus")))
           .withWatermark("ets", "10 minutes")
@@ -169,14 +171,7 @@ object QueriesStream {
           .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
           .select(unix_micros(col("window.start")).as("bucket_us"),
             col("event_type"), col("n"), col("sum_cents"))
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .option("checkpointLocation", ckpt)
-          .queryName(sinkName)
-          .start()
-      }
-    }),
+      }),
 
     // stateful streaming dedup: dropDuplicates across micro-batches —
     // the streaming-ingest half of the exact-dedup pair (q26 is the
@@ -186,79 +181,52 @@ object QueriesStream {
     // recurs in batches 1-3. Keys-only projection before the dedup
     // keeps the emitted row set deterministic (dropDuplicates keeps an
     // arbitrary first row; the key set is a pure function of the data).
-    "q60_stream_dedup" -> ((s, d) => {
-      val dir = sharedQuartileDir(s, d)
-      val schema = s.read.parquet(dir).schema
-      counter += 1
-      val sinkName = s"q60_sink_$counter"
-      // small-state run: the dedup state store otherwise commits
-      // session-partition-count files per micro-batch (the q79 fix)
-      runSmallStateStream(s, sinkName) { ckpt =>
-        s.readStream
-          .schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(dir)
+    // Small-state run: the dedup state store otherwise commits
+    // session-partition-count files per micro-batch (the q79 fix).
+    "q60_stream_dedup" -> ((s, d) =>
+      runSmallStateStream(s, "q60", "append") {
+        quartileStream(s, d)
           .select("user_id", "event_type")
           .dropDuplicates("user_id", "event_type")
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .option("checkpointLocation", ckpt)
-          .queryName(sinkName)
-          .start()
-      }
-    }),
+      }),
 
     // custom streaming state: per-user SESSIONIZATION via
     // flatMapGroupsWithState (Append mode) — events replayed as four
     // time-ranged files (maxFilesPerTrigger=1 ⇒ real cross-micro-batch
     // state transitions); a session closes after a 300 s inactivity gap;
     // each user's final (still-open) session stays in state by design and
-    // the oracle drops it symmetrically.
+    // the oracle drops it symmetrically. Small-state run (the q79 fix):
+    // flatMapGroupsWithState commits session-partition-count state files
+    // per micro-batch otherwise.
     "q53_stream_sessions" -> ((s, d) => {
       import s.implicits._
       import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-      val dir = sharedQuartileDir(s, d)
-      val schema = s.read.parquet(dir).schema
-      counter += 1
-      val sinkName = s"q53_sink_$counter"
       val GapUs = 300000000L
-      // small-state run (the q79 fix): flatMapGroupsWithState commits
-      // session-partition-count state files per micro-batch otherwise
-      runSmallStateStream(s, sinkName) { ckpt =>
-      s.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(dir)
-        .select("user_id", "event_id", "tus", "cents")
-        .as[(Long, Long, Long, Long)]
-        .groupByKey(_._1)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-          (user: Long, rows: Iterator[(Long, Long, Long, Long)],
-           state: GroupState[Seq[(Long, Long, Long)]]) => {
-            val all = (state.getOption.getOrElse(Seq.empty) ++
-              rows.map(r => (r._3, r._2, r._4))).sortBy(t => (t._1, t._2))
-            // split on inactivity gaps
-            val sessions = all.foldLeft(Vector.empty[Vector[(Long, Long, Long)]]) {
-              case (acc, e) =>
-                if (acc.nonEmpty && e._1 - acc.last.last._1 <= GapUs)
-                  acc.init :+ (acc.last :+ e)
-                else acc :+ Vector(e)
-            }
-            state.update(sessions.lastOption.map(_.toSeq).getOrElse(Seq.empty))
-            sessions.dropRight(1).iterator.map { sess =>
-              (user, sess.head._1, sess.last._1,
-                sess.length.toLong, sess.map(_._3).sum)
-            }
-          })
-        .toDF("user_id", "session_start_us", "session_end_us",
-          "n_events", "sum_cents")
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .queryName(sinkName)
-        .start()
+      runSmallStateStream(s, "q53", "append") {
+        quartileStream(s, d)
+          .select("user_id", "event_id", "tus", "cents")
+          .as[(Long, Long, Long, Long)]
+          .groupByKey(_._1)
+          .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+            (user: Long, rows: Iterator[(Long, Long, Long, Long)],
+             state: GroupState[Seq[(Long, Long, Long)]]) => {
+              val all = (state.getOption.getOrElse(Seq.empty) ++
+                rows.map(r => (r._3, r._2, r._4))).sortBy(t => (t._1, t._2))
+              // split on inactivity gaps
+              val sessions = all.foldLeft(Vector.empty[Vector[(Long, Long, Long)]]) {
+                case (acc, e) =>
+                  if (acc.nonEmpty && e._1 - acc.last.last._1 <= GapUs)
+                    acc.init :+ (acc.last :+ e)
+                  else acc :+ Vector(e)
+              }
+              state.update(sessions.lastOption.map(_.toSeq).getOrElse(Seq.empty))
+              sessions.dropRight(1).iterator.map { sess =>
+                (user, sess.head._1, sess.last._1,
+                  sess.length.toLong, sess.map(_._3).sum)
+              }
+            })
+          .toDF("user_id", "session_start_us", "session_end_us",
+            "n_events", "sum_cents")
       }
     }),
 
@@ -274,26 +242,19 @@ object QueriesStream {
     // watermark, outside the join range), so the bounded-stream output
     // equals the batch interval join exactly.
     "q79_stream_join" -> ((s, d) => {
-      val dir = sharedQuartileDir(s, d)
-      val schema = s.read.parquet(dir).schema
-      counter += 1
-      val sinkName = s"q79_sink_$counter"
-      runSmallStateStream(s, sinkName) { ckpt =>
-        val src = s.readStream
-          .schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(dir)
-          .select("user_id", "event_id", "event_type", "tus")
-        val views = src.filter(col("event_type") === "view")
-          .select(col("user_id").as("v_user"),
-            col("event_id").as("view_event_id"),
-            timestamp_micros(col("tus")).as("v_ts"))
-          .withWatermark("v_ts", "1 day")
-        val buys = src.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("b_user"),
-            col("event_id").as("purchase_event_id"),
-            timestamp_micros(col("tus")).as("b_ts"))
-          .withWatermark("b_ts", "1 day")
+      val src = quartileStream(s, d)
+        .select("user_id", "event_id", "event_type", "tus")
+      val views = src.filter(col("event_type") === "view")
+        .select(col("user_id").as("v_user"),
+          col("event_id").as("view_event_id"),
+          timestamp_micros(col("tus")).as("v_ts"))
+        .withWatermark("v_ts", "1 day")
+      val buys = src.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("b_user"),
+          col("event_id").as("purchase_event_id"),
+          timestamp_micros(col("tus")).as("b_ts"))
+        .withWatermark("b_ts", "1 day")
+      runSmallStateStream(s, "q79", "append") {
         views.join(buys,
             col("v_user") === col("b_user") &&
               col("b_ts") >= col("v_ts") &&
@@ -302,12 +263,6 @@ object QueriesStream {
             col("view_event_id"), col("purchase_event_id"),
             unix_micros(col("v_ts")).as("view_ts_us"),
             unix_micros(col("b_ts")).as("purchase_ts_us"))
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .option("checkpointLocation", ckpt)
-          .queryName(sinkName)
-          .start()
       }
     }))
 

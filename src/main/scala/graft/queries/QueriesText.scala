@@ -31,25 +31,26 @@ object QueriesText {
   private def t(s: SparkSession, d: String, n: String): DataFrame =
     s.read.parquet(s"$d/$n.parquet")
 
-  /** The suffix-array frame q109/q110 share (ranked once per input dir;
-    * Bench clears the memo per rep). At cap=128 the ranking is ONE range
+  /** The suffix-array frame q109/q110 share (ranked once per input dir
+    * and rep, via [[FrameCache]]). At cap=128 the ranking is ONE range
     * exchange sorting the windows themselves (SuffixArray.DirectSortCap),
     * so the win payload already rode the only exchange — one full frame
     * (doc_id, pos, win, sa_rank) serves q109 (projection, no join) and
     * q110 (adjacent-LCP, no rank⋈window join either).
     */
   private def saMemo(s: SparkSession, d: String): DataFrame =
-    memoize(s"suffixfull:$d") {
+    FrameCache(s, s"suffixfull:$d") {
       graft.text.SuffixArray.saWithAdjacent(
-        t(s, d, "documents"), "doc_id", "text", 128)
+        t(s, d, "documents"), "doc_id", "text", 128).localCheckpoint(true)
     }
 
   /** The exact cosine top-3 frame q31 projects and q89's margin scorer
     * consumes — one O(n²·d) brute pass per rep, not two.
     */
   private def cosineTop3Memo(s: SparkSession, d: String): DataFrame =
-    memoize(s"cosinetop3:$d") {
+    FrameCache(s, s"cosinetop3:$d") {
       Dedup.cosineTopK(t(s, d, "embeddings"), "vec_id", "embedding", 3)
+        .localCheckpoint(true)
     }
 
   /** q113's deterministic phrase blocklist — one single-token phrase
@@ -633,38 +634,37 @@ object QueriesText {
     * min is duplicate-insensitive), so q32's output is unchanged.
     */
   private def shingleSetsMemo(s: SparkSession, d: String): DataFrame =
-    memoize(s"shinglesets:$d") {
+    FrameCache(s, s"shinglesets:$d") {
       t(s, d, "documents").select(col("doc_id").as("id"),
-        Dedup.distinctShingleHashes(col("text")).as("hs"))
+        Dedup.distinctShingleHashes(col("text")).as("hs")).localCheckpoint(true)
     }
 
   private def minhashCandMemo(s: SparkSession, d: String): DataFrame =
-    memoize(s"minhashcand:$d") {
-      Dedup.minhashCandidatesFromHashes(shingleSetsMemo(s, d))
+    FrameCache(s, s"minhashcand:$d") {
+      Dedup.minhashCandidatesFromHashes(shingleSetsMemo(s, d)).localCheckpoint(true)
     }
 
   private def jaccardVerifiedPairs(s: SparkSession, d: String): DataFrame =
-    memoize(s"jaccardverified:$d") { jaccardVerifiedPairsBody(s, d) }
-
-  private def jaccardVerifiedPairsBody(s: SparkSession, d: String): DataFrame = {
-    // the distinct shingle-hash set is staged ONCE per doc and feeds
-    // both the banding and the exact verify (signatures are identical
-    // on the distinct set); re-hashing text per candidate pair was 48 s
-    // of a 140 s 500k-doc pipeline (BENCH.md round 4); memoised (like
-    // saMemo) because q59 AND q95 both run the full pipeline
-    val sets = shingleSetsMemo(s, d)
-    val cand = minhashCandMemo(s, d)
-    val withA = sets
-      .select(col("id").as("id_a"), col("hs").as("hs_a"))
-      .join(broadcast(cand), Seq("id_a"))
-    sets.select(col("id").as("id_b"), col("hs").as("hs_b"))
-      .join(broadcast(withA), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        floor(Dedup.jaccardByHashSets(col("hs_a"), col("hs_b")) *
-          lit(1000000.0) + lit(0.5)).cast("long").as("j_e6"))
-      .withColumn("is_dup",
-        when(col("j_e6") >= 500000L, 1L).otherwise(0L))
-  }
+    FrameCache(s, s"jaccardverified:$d") {
+      // the distinct shingle-hash set is staged ONCE per doc and feeds
+      // both the banding and the exact verify (signatures are identical
+      // on the distinct set); re-hashing text per candidate pair was 48 s
+      // of a 140 s 500k-doc pipeline (BENCH.md round 4); cached (like
+      // saMemo) because q59 AND q95 both run the full pipeline
+      val sets = shingleSetsMemo(s, d)
+      val cand = minhashCandMemo(s, d)
+      val withA = sets
+        .select(col("id").as("id_a"), col("hs").as("hs_a"))
+        .join(broadcast(cand), Seq("id_a"))
+      sets.select(col("id").as("id_b"), col("hs").as("hs_b"))
+        .join(broadcast(withA), Seq("id_b"))
+        .select(col("id_a"), col("id_b"),
+          floor(Dedup.jaccardByHashSets(col("hs_a"), col("hs_b")) *
+            lit(1000000.0) + lit(0.5)).cast("long").as("j_e6"))
+        .withColumn("is_dup",
+          when(col("j_e6") >= 500000L, 1L).otherwise(0L))
+        .localCheckpoint(true)
+    }
 
   /** q96 body: Broder containment over the same staged shingle-hash
     * sets and the same broadcast candidate frame as q59 —

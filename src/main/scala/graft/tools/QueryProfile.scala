@@ -77,8 +77,7 @@ object QueryProfile {
     spark.sparkContext.addSparkListener(listener)
 
     for (name <- names) {
-      graft.queries.Derived.clearMemo()
-      graft.queries.QueriesGraph.clearMemo()
+      graft.queries.FrameCache.release()
       stages.clear(); jobLog.clear(); stageJob.clear(); jobs = 0
       spark.sparkContext.setJobDescription(name)
       val t0 = System.nanoTime()
