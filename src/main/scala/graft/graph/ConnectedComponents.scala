@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.runtime.Hybrid
 
 /** Iterative connected components in DataFrame joins — the alternating
   * large-star / small-star algorithm of Kiveris et al., "Connected
@@ -27,26 +28,14 @@ object ConnectedComponents {
 
   final case class Result(labels: DataFrame, rounds: Int)
 
-  /** Edge sets at or below this size run [[localLabels]] — one union-find
-    * task — instead of the O(log n)-round star loop: identical min-nid
-    * labels, ~2 driver round-trips instead of 10-25 (each star round is a
-    * checkpoint + fingerprint trip; at fixture scale the loop is pure
-    * driver latency — guide §2.4). 500k canonical edges is ≤ ~8 MB in one
-    * task, safe on any executor; every at-scale run (the 4M/8M/16M
-    * evidence fixtures, any real 100 TB input) sits far above it and
-    * keeps the iterative path. Env-overridable for experiments, not a
-    * local-mode tune: the gate is on DATA size, not cluster shape.
-    */
-  private val LocalMaxEdges: Long =
-    sys.env.get("SPARK_GRAFT_CC_LOCAL_MAX").map(_.toLong).getOrElse(500000L)
-
   /** @param edges DataFrame with two Long columns `src`, `dst` (undirected,
     *              self-loops/duplicates tolerated).
     * @param checkpointer optional durable per-round checkpoint hook
     *                     (round, labelsOrEdges) => possibly-reloaded frame.
-    * @param localMaxEdges size gate for the single-task union-find path
-    *                      (see [[LocalMaxEdges]]); 0 forces the iterative
-    *                      path (specs pin local ≡ iterative labels).
+    * @param localMaxEdges edge sets up to this size run [[localLabels]],
+    *                      one union-find task, instead of the star loop
+    *                      (see [[graft.runtime.Hybrid]]; 0 forces the loop —
+    *                      specs pin local ≡ iterative labels).
     * @return labels (nid, comp) covering every nid present in `edges`.
     */
   def run(
@@ -54,7 +43,7 @@ object ConnectedComponents {
       maxRounds: Int = 50,
       checkpointer: Option[(Int, DataFrame) => DataFrame] = None,
       assumeDistinct: Boolean = false,
-      localMaxEdges: Long = LocalMaxEdges): Result = {
+      localMaxEdges: Long = Hybrid.CcLocalMax): Result = {
 
     // assumeDistinct: callers holding an already-canonical edge set (the
     // memoised distinct frames, contraction outputs) skip the redundant
@@ -67,11 +56,10 @@ object ConnectedComponents {
 
     var rounds = 0
     var prev = fingerprint(e)
-    // HYBRID small path: the fingerprint already counted the edge set (no
-    // extra job); below the gate the whole component structure fits one
-    // task, so a single union-find pass replaces the star loop. Durable
-    // checkpointers stay iterative (their resume contract is the loop).
-    if (checkpointer.isEmpty && prev._1 <= localMaxEdges)
+    // the fingerprint already counted the edge set (no extra job).
+    // Durable checkpointers stay iterative (their resume contract is the
+    // loop).
+    if (checkpointer.isEmpty && Hybrid.local("cc", localMaxEdges)(prev._1))
       return Result(localLabels(e), 0)
     var done = false
 
@@ -157,7 +145,7 @@ object ConnectedComponents {
   }
 
   /** Single-task min-label union-find over a (checkpointed) small edge
-    * set — the sub-[[LocalMaxEdges]] path of [[run]]. Pointing the larger
+    * set — the small-input path of [[run]]. Pointing the larger
     * root at the smaller keeps every tree's root = the component minimum,
     * so labels are bit-identical to the star loop's min-nid fixpoint and
     * independent of row order (pure function of the edge SET). Lazily

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.geo.Geo
+import graft.runtime.Hybrid
 
 /** Remaining directed-flow ("osm-lump-ways-down") operators:
   * D6 expanded edge lengths, D2 loop output, S8/S10 loop stats sinks,
@@ -410,30 +411,23 @@ object DownOps {
   def tagGroupCC(
       edges: DataFrame,
       weakLabels: Option[DataFrame] = None,
-      sizeThreshold: Long = Local.MaxLocalGroupRows): DataFrame = {
+      sizeThreshold: Long = Hybrid.MaxLocalGroupRows): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // HYBRID (guide §2.4/§1.2: fewest rounds wins): same-tag components
-    // never span an undirected weak component, so callers holding the
-    // weak-CC labels of this edge set (memoised elsewhere) localise the
-    // tag-CC to ONE shuffle — a per-weak-component union-find replaces
-    // the iterative composite-key CC's driver rounds, with identical
-    // min-nid labels (the label is a pure function of the component
-    // partition). Weak components above `sizeThreshold` edge rows keep
-    // the distributed path (scale guard, same split as betweenness).
+    // Same-tag components never span an undirected weak component, so
+    // callers holding the weak-CC labels of this edge set (memoised
+    // elsewhere) split by weak component: a per-component union-find
+    // replaces the iterative composite-key CC's driver rounds, with
+    // identical min-nid labels (the label is a pure function of the
+    // component partition).
     weakLabels match {
       case None => tagGroupCCDistributed(edges)
       case Some(wl) =>
         val keyed = edges.select(col("src"), col("dst"), col("tag"))
           .join(wl.withColumnRenamed("nid", "src"), Seq("src"))
           .select("comp", "src", "dst", "tag")
-        val big = keyed.groupBy("comp").agg(count(lit(1)).as("ne"))
-          .filter(col("ne") > sizeThreshold)
-          .select("comp").localCheckpoint(true)
-        val anyBig = big.limit(1).count() > 0L
-        val small = if (anyBig) keyed.join(big, Seq("comp"), "left_anti")
-          else keyed
-        val localRes = small
+        val split = Hybrid.split("tag_group_cc", keyed, "comp", sizeThreshold)
+        val localRes = split.small(keyed)
           .as[(Long, Long, Long, Option[String])]
           .groupByKey(_._1)
           .flatMapGroups { (_, rows) =>
@@ -464,10 +458,8 @@ object DownOps {
             }
           }
           .toDF("src", "dst", "tag", "tag_group_nid")
-        if (!anyBig) localRes
-        else localRes.unionByName(tagGroupCCDistributed(
-          keyed.join(big, Seq("comp"), "left_semi")
-            .select("src", "dst", "tag")))
+        split.union(localRes)(tagGroupCCDistributed(
+          split.big(keyed).select("src", "dst", "tag")))
     }
   }
 

@@ -3,6 +3,10 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import java.nio.file.Files
+import org.apache.spark.HashPartitioner
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import graft.runtime.Hybrid
 
 /** Directed-flow operators (SURVEY.md §2.6): end points, topological
   * frontier propagation of upstream metres with the reference's full
@@ -112,16 +116,15 @@ object Flow {
     (up.toMap, flows.toSeq)
   }
 
-  /** Hybrid D5 (SURVEY §7.5.3): weak-CC the DAG; components under
-    * `sizeThreshold` edges run the exact local walk inside
-    * `flatMapGroups` (one shuffle, zero driver rounds — river basins are
-    * almost always small relative to the cluster); only giant components
-    * pay the frontier-round machinery. Batch-by-ready-set is confluent,
-    * so both engines produce identical values.
+  /** Hybrid D5 ([[graft.runtime.Hybrid]]): weak-CC the DAG; components
+    * up to `sizeThreshold` edges run the exact local walk inside
+    * `flatMapGroups` (one shuffle, zero driver rounds); only giant
+    * components pay the frontier rounds. Batch-by-ready-set is
+    * confluent, so both engines produce identical values.
     */
   def upstreamFlowHybrid(
       edges: DataFrame,
-      sizeThreshold: Long = 1000000,
+      sizeThreshold: Long = Hybrid.FlowLocalMax,
       maxRounds: Int = 100000,
       labels: Option[DataFrame] = None): UpstreamResult = {
     val spark = edges.sparkSession
@@ -133,13 +136,9 @@ object Flow {
     val weak = labels.getOrElse(
       ConnectedComponents.run(e0.select("src", "dst")).labels)
     val labelled = e0.join(weak.withColumnRenamed("nid", "src"), Seq("src"))
-    val sizes = labelled.groupBy("comp").agg(count(lit(1)).as("n"))
-    val small = labelled.join(sizes.filter(col("n") <= sizeThreshold)
-      .select("comp"), Seq("comp"), "left_semi")
-    val big = labelled.join(sizes.filter(col("n") > sizeThreshold)
-      .select("comp"), Seq("comp"), "left_semi")
+    val split = Hybrid.split("flow.upstream", labelled, "comp", sizeThreshold)
 
-    val localRes = small
+    val localRes = split.small(labelled)
       .select("comp", "src", "dst", "len", "tag")
       .as[(Long, Long, Long, Double, Option[String])]
       .groupByKey(_._1)
@@ -155,10 +154,10 @@ object Flow {
       .map(r => (r._2, r._3, r._4.orNull, r._5, r._6))
       .toDF("src", "dst", "tag", "len", "flow_m")
 
-    if (big.isEmpty) UpstreamResult(localNodes, localFlows, 0)
+    if (!split.hasBig) UpstreamResult(localNodes, localFlows, 0)
     else {
-      val bigRes = upstreamFlow(big.select("src", "dst", "len", "tag"),
-        maxRounds)
+      val bigRes = upstreamFlow(
+        split.big(labelled).select("src", "dst", "len", "tag"), maxRounds)
       UpstreamResult(
         localNodes.union(bigRes.nodeUpstream),
         localFlows.union(bigRes.edgeFlow),
@@ -173,6 +172,35 @@ object Flow {
       checkpointer: Option[(Int, DataFrame) => DataFrame] = None): UpstreamResult =
     upstreamFlow(edges.withColumn("tag", lit(null).cast("string")),
       maxRounds, checkpointer)
+
+  /** Shared setup of the Pregel-style RDD loops: a partitioner sized to
+    * the data (AQE cannot coalesce inside an RDD loop) — ~100k edges per
+    * partition, capped at the session's shuffle parallelism, so small
+    * graphs take 1-2 partitions per round instead of `shuffle.partitions`
+    * empty tasks × rounds — and whether reliable checkpoints are
+    * available. Reliable checkpoints need a SHARED path on a real
+    * cluster (a driver-local path is invisible to remote executors), so
+    * only local mode defaults to a temp dir, deleted when the SparkContext
+    * ends — not on a [[graft.queries.FrameCache]] release, since the
+    * context keeps pointing at it across sessions. Clusters without a
+    * configured checkpoint dir fall back to pinned localCheckpoints.
+    */
+  private def rddLoopSetup(edges: DataFrame): (HashPartitioner, Boolean) = {
+    val spark = edges.sparkSession
+    val sc = spark.sparkContext
+    val nParts = math.max(1L, math.min(
+      spark.conf.get("spark.sql.shuffle.partitions", "32").toLong,
+      edges.count() / 100000L + 1L)).toInt
+    if (sc.getCheckpointDir.isEmpty && sc.isLocal) {
+      val dir = Files.createTempDirectory("graft-rdd-ckpt")
+      sc.setCheckpointDir(dir.toString)
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+          graft.queries.FrameCache.deleteTree(dir)
+      })
+    }
+    (new HashPartitioner(nParts), sc.getCheckpointDir.nonEmpty)
+  }
 
   /** D5 — upstream accumulation over a DAG with the full splitting rule.
     *
@@ -199,7 +227,6 @@ object Flow {
       checkpointer: Option[(Int, DataFrame) => DataFrame] = None): UpstreamResult = {
     val spark = edges.sparkSession
     import spark.implicits._
-    import org.apache.spark.HashPartitioner
     import org.apache.spark.storage.StorageLevel
 
     val e0 = edges.select(
@@ -236,17 +263,7 @@ object Flow {
       StructField("tag", StringType), StructField("len", DoubleType),
       StructField("flow_m", DoubleType))))
 
-    // partitioner sized to the data (AQE cannot coalesce inside an RDD
-    // loop — same sizing rule as biggestEndAssignment)
-    val eCount = e0.count()
-    val nParts = math.max(1L, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toLong,
-      eCount / 100000L + 1L)).toInt
-    val part = new HashPartitioner(nParts)
-    if (spark.sparkContext.getCheckpointDir.isEmpty && spark.sparkContext.isLocal)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-rdd-ckpt").toString)
-    val reliableCkpt = spark.sparkContext.getCheckpointDir.nonEmpty
+    val (part, reliableCkpt) = rddLoopSetup(e0)
 
     type Edge = (Long, Option[String], Double) // (dst, tag, len)
     val eRdd = e0.as[(Long, Long, Double, Option[String])].rdd
@@ -428,16 +445,15 @@ object Flow {
     best.iterator.map { case (n, (up, end)) => (n, end, up) }.toSeq
   }
 
-  /** Hybrid D9 (the [[upstreamFlowHybrid]] pattern): weak-CC the DAG;
-    * components under `sizeThreshold` edges run [[biggestEndLocal]] in
-    * one `flatMapGroups` shuffle — zero driver rounds — and only giant
-    * components pay the co-partitioned Pregel. Values are bit-identical
-    * (comparison-only propagation; see [[biggestEndLocal]]).
+  /** Hybrid D9, split like [[upstreamFlowHybrid]]: small components run
+    * [[biggestEndLocal]], giant ones the co-partitioned Pregel. Values
+    * are bit-identical (comparison-only propagation). The end rows follow
+    * the edge split of their component.
     */
   def biggestEndAssignmentHybrid(
       edges: DataFrame,          // (src, dst)
       endUpstream: DataFrame,    // (nid, upstream_m) for end nodes
-      sizeThreshold: Long = 1000000,
+      sizeThreshold: Long = Hybrid.FlowLocalMax,
       labels: Option[DataFrame] = None): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -445,9 +461,7 @@ object Flow {
       .localCheckpoint(true)
     val weak = labels.getOrElse(ConnectedComponents.run(e0).labels)
     val labelled = e0.join(weak.withColumnRenamed("nid", "src"), Seq("src"))
-    val sizes = labelled.groupBy("comp").agg(count(lit(1)).as("n"))
-    val smallComps = sizes.filter(col("n") <= sizeThreshold).select("comp")
-    val small = labelled.join(smallComps, Seq("comp"), "left_semi")
+    val split = Hybrid.split("flow.biggest_end", labelled, "comp", sizeThreshold)
     val endsTyped = endUpstream
       .select(col("nid").cast("long"), col("upstream_m").cast("double"))
     val endLab = endsTyped.join(weak, Seq("nid"))
@@ -456,27 +470,20 @@ object Flow {
     val orphanEnds = endsTyped.join(weak, Seq("nid"), "left_anti")
       .groupBy("nid").agg(max("upstream_m").as("end_upstream_m"))
       .select(col("nid"), col("nid").as("end_nid"), col("end_upstream_m"))
-    val smallEnds = endLab.join(smallComps, Seq("comp"), "left_semi")
-    val localRes = small
+    val localRes = split.small(labelled)
       .select("comp", "src", "dst")
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
-      .cogroup(smallEnds.select("comp", "nid", "upstream_m")
+      .cogroup(split.small(endLab).select("comp", "nid", "upstream_m")
         .as[(Long, Long, Double)].groupByKey(_._1)) { (_, es0, ends0) =>
         val es = es0.map(r => (r._2, r._3)).toSeq
         val ends = ends0.map(r => (r._2, r._3)).toSeq
         biggestEndLocal(es, ends).iterator
       }
       .toDF("nid", "end_nid", "end_upstream_m")
-    val bigComps = sizes.filter(col("n") > sizeThreshold).select("comp")
-    val smallSide = localRes.unionByName(orphanEnds)
-    if (bigComps.isEmpty) smallSide
-    else {
-      val big = labelled.join(bigComps, Seq("comp"), "left_semi")
-      val bigEnds = endLab.join(bigComps, Seq("comp"), "left_semi")
-      smallSide.unionByName(biggestEndAssignment(
-        big.select("src", "dst"), bigEnds.select("nid", "upstream_m")))
-    }
+    split.union(localRes.unionByName(orphanEnds))(biggestEndAssignment(
+      split.big(labelled).select("src", "dst"),
+      split.big(endLab).select("nid", "upstream_m")))
   }
 
   def biggestEndAssignment(
@@ -486,7 +493,6 @@ object Flow {
       checkpointer: Option[(Int, DataFrame) => DataFrame] = None): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    import org.apache.spark.HashPartitioner
     import org.apache.spark.storage.StorageLevel
 
     // Pregel-style RDD loop with ONE shared HashPartitioner: the static
@@ -498,23 +504,7 @@ object Flow {
     // partitioning across localCheckpoint, so Catalyst cannot express
     // "keep this co-partitioned across an iteration"); this is the
     // documented legitimate RDD case — iterative co-partitioned state.
-    // size the partitioner to the DATA (AQE cannot coalesce inside an
-    // RDD loop): ~100k edges per partition, capped at the session's
-    // shuffle parallelism — small graphs take 1-2 partitions per round
-    // instead of paying `shuffle.partitions` empty tasks × rounds
-    val eCount = edges.count()
-    val nParts = math.max(1L, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toLong,
-      eCount / 100000L + 1L)).toInt
-    val part = new HashPartitioner(nParts)
-    // reliable checkpoints need a SHARED path on a real cluster; only
-    // default to a temp dir in local mode (a driver-local path would be
-    // invisible to remote executors). Clusters without a configured
-    // checkpoint dir fall back to pinned localCheckpoints.
-    if (spark.sparkContext.getCheckpointDir.isEmpty && spark.sparkContext.isLocal)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-rdd-ckpt").toString)
-    val reliableCkpt = spark.sparkContext.getCheckpointDir.nonEmpty
+    val (part, reliableCkpt) = rddLoopSetup(edges)
     val eByDst = edges
       .select(col("dst").cast("long"), col("src").cast("long"))
       .as[(Long, Long)].rdd

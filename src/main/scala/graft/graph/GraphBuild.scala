@@ -1,6 +1,7 @@
 package graft.graph
 
 import graft.model.Edge
+import graft.runtime.Hybrid
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -266,35 +267,28 @@ object GraphBuild {
     * Used by the sharded geometry path, where the whole component never
     * fits one task so `Local.compress` cannot run.
     *
-    * HYBRID: components at or below `localPerCompMax` edges run
-    * `Local.compress` + distinct-vertex count in ONE shuffle
-    * (groupByKey per comp) instead of the ~15-exchange closed form —
-    * the values are identical by the closed form's own contract (it was
-    * derived from, and is spec-pinned against, `Local.compress`;
-    * DistPeelSpec). The default matches the shard threshold that routes
-    * components here: in production only >2M-edge components reach this
-    * function and keep the distributed form; the q119 gate (threshold 1)
-    * routes fixture components, which localise.
+    * Components up to `localPerCompMax` edges ([[graft.runtime.Hybrid]])
+    * run `Local.compress` + distinct-vertex count in ONE shuffle instead
+    * of the ~15-exchange closed form — identical values by the closed
+    * form's own contract (DistPeelSpec). The default matches the shard
+    * threshold that routes components here: in production only
+    * >2M-edge components arrive and keep the distributed form; the q119
+    * gate (threshold 1) routes fixture components, which localise.
     *
     * @param edges (comp, src, dst) canonical (deduplicated) undirected
     * @return (comp, num_nodes)
     */
   def compressedNumNodes(
-      edges: DataFrame, localPerCompMax: Long = 2000000L): DataFrame = {
+      edges: DataFrame, localPerCompMax: Long = Hybrid.ComponentLocalMax): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e0 = edges.select(
       col("comp"),
       least(col("src"), col("dst")).as("src"),
       greatest(col("src"), col("dst")).as("dst"))
-      .localCheckpoint(true)
-    val sizes = e0.groupBy("comp").agg(count(lit(1)).as("n"))
-    val bigComps = sizes.filter(col("n") > localPerCompMax)
-      .select("comp").localCheckpoint(true)
-    val anyBig = bigComps.limit(1).count() > 0L
-    val smallE =
-      if (anyBig) e0.join(bigComps, Seq("comp"), "left_anti") else e0
-    val localRes = smallE
+      .localCheckpoint(false) // materialised by the gate's count job
+    val split = Hybrid.split("num_nodes", e0, "comp", localPerCompMax)
+    val localRes = split.small(e0)
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
       .mapGroups { (comp, rows) =>
@@ -304,9 +298,7 @@ object GraphBuild {
         (comp, compressed.flatMap(e => Seq(e._1, e._2)).distinct.size.toLong)
       }
       .toDF("comp", "num_nodes")
-    if (!anyBig) return localRes
-    localRes.unionByName(
-      compressedNumNodesDist(e0.join(bigComps, Seq("comp"), "left_semi")))
+    split.union(localRes)(compressedNumNodesDist(split.big(e0)))
   }
 
   /** The distributed closed form over pre-canonicalized (comp, src, dst)

@@ -1,6 +1,7 @@
 package graft.graph
 
 import scala.collection.mutable
+import graft.runtime.Hybrid
 
 /** Per-component local graph algorithms (SURVEY.md §2.5) — pure Scala,
   * executed inside `groupByKey(comp).flatMapGroups` so components run in
@@ -9,19 +10,9 @@ import scala.collection.mutable
   */
 object Local {
 
-  /** Per-group materialization cap for the local algorithms that must
-    * hold one component/group in a single task (D16 line walk, frames,
-    * betweenness, D17 FEATURES assembly — the D17 basin distances+path
-    * shard via [[DistLongest]] above the hybrid threshold). Overridable with
-    * `-Dgraft.maxLocalGroupRows=N` (spark.executor.extraJavaOptions on a
-    * cluster). ~20M rows ≈ a few GB of boxed tuples — loud failure
-    * comfortably before the executor OOM-kills.
-    */
-  lazy val MaxLocalGroupRows: Long =
-    sys.props.get("graft.maxLocalGroupRows").map(_.toLong).getOrElse(20000000L)
-
   /** Materialize a per-group iterator with a LOUD size guard (SURVEY
-    * §7.5.4): a mega-component crossing the cap fails with sizing
+    * §7.5.4): a mega-component crossing
+    * [[graft.runtime.Hybrid.MaxLocalGroupRows]] fails with sizing
     * guidance instead of grinding into spill/OOM death. The undirected
     * geometry path shards instead ([[DistPeel]]); the operators calling
     * this have whole-group semantics (a single feature's props/geometry
@@ -31,9 +22,9 @@ object Local {
     val buf = scala.collection.mutable.ArrayBuffer.empty[T]
     rows.foreach { r =>
       buf += r
-      if (buf.length > MaxLocalGroupRows)
+      if (buf.length > Hybrid.MaxLocalGroupRows)
         throw new IllegalStateException(
-          s"$what: group exceeds ${MaxLocalGroupRows} rows — one task " +
+          s"$what: group exceeds ${Hybrid.MaxLocalGroupRows} rows — one task " +
             "cannot hold it; raise executor memory and " +
             "-Dgraft.maxLocalGroupRows, or split the group upstream")
     }

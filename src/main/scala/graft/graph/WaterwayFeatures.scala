@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.geo.Geo
 import graft.outputs.GeoJson
+import graft.runtime.Hybrid
 
 /** D16 — grouped-waterways GeoJSON features with the FULL nested
   * relationship JSON (down/main.rs:1908-2229): per tag group a
@@ -274,19 +275,18 @@ object WaterwayFeatures {
     * @param lens (src, dst, len)
     * @param flows (src, dst, flow_m) — per-edge upstream
     * @param nodes (nid, lat, lon)
-    * @param sizeThreshold HYBRID gate (the frames pattern): groups ≤ this
-    *        many edges run the exact single-task walk (byte parity with
+    * @param sizeThreshold groups up to this many edges run the exact
+    *        single-task walk ([[graft.runtime.Hybrid]]; byte parity with
     *        the pinned fixtures); bigger groups take the scale path —
     *        directed chain contraction ([[DistContractDir]]) → pillar
     *        replay of the line walk (decisions only happen at junctions,
     *        so the replay visits constituent edges in the identical
     *        order) → distributed chain expansion and per-line rendering.
-    *        The default is the old loud row cap, so behaviour changes
-    *        ONLY where the old code failed. On the scale path the group
-    *        task holds O(pillar graph) + O(feature string bytes) — the
-    *        string is the output row itself, the irreducible floor for a
-    *        one-feature-per-group sink — instead of O(edges) of boxed
-    *        tuples, hash maps and walk state. Scalar stats move from
+    *        On the scale path the group task holds O(pillar graph) +
+    *        O(feature string bytes) — the string is the output row
+    *        itself, the irreducible floor for a one-feature-per-group
+    *        sink — instead of O(edges) of boxed tuples, hash maps and
+    *        walk state. Scalar stats move from
     *        seq-order to shuffle-order summation (fp associativity only;
     *        rounded at 0.1 m — D16AtScaleSpec pins byte parity).
     * @return (gkey, feature) one pre-serialized Feature per tag group,
@@ -299,7 +299,7 @@ object WaterwayFeatures {
       nodes: DataFrame,
       minLengthM: Option[Double] = None,
       precomputed: Option[(DataFrame, GroupBundle, DataFrame)] = None,
-      sizeThreshold: Long = Local.MaxLocalGroupRows)
+      sizeThreshold: Long = Hybrid.MaxLocalGroupRows)
       : DataFrame = {
     val spark = tagGrouped.sparkSession
     import spark.implicits._
@@ -343,14 +343,10 @@ object WaterwayFeatures {
     val bProps = spark.sparkContext.broadcast(propsByKey)
     val minLen = minLengthM
 
-    // hybrid gate: group edge counts route small → exact single-task
-    // walk, big → the contraction scale path
-    val sizes = e.groupBy("gkey").agg(count(lit(1)).as("n"))
-    val bigKeys = sizes.filter(col("n") > sizeThreshold).select("gkey")
-    val small = e.join(bigKeys, Seq("gkey"), "left_anti")
+    val split = Hybrid.split("grouped_waterways", e, "gkey", sizeThreshold)
 
     // ---- distributed per-group geometry + local stats ------------------
-    val localRes = small.join(n1, Seq("src")).join(n2, Seq("dst"))
+    val localRes = split.small(e).join(n1, Seq("src")).join(n2, Seq("dst"))
       .select(col("gkey"), col("src"), col("dst"), col("flow"), col("len"),
         col("slat"), col("slon"), col("dlat"), col("dlon"))
       .as[(String, Long, Long, Double, Double, Double, Double, Double, Double)]
@@ -433,10 +429,8 @@ object WaterwayFeatures {
       }
       .toDF("gkey", "feature")
 
-    if (bigKeys.isEmpty) localRes
-    else localRes.unionByName(groupedFeaturesAtScale(
-      e.join(bigKeys, Seq("gkey"), "left_semi")
-        .select("gkey", "src", "dst", "len", "flow"),
+    split.union(localRes)(groupedFeaturesAtScale(
+      split.big(e).select("gkey", "src", "dst", "len", "flow"),
       nodes, bProps, minLen, spark))
   }
 

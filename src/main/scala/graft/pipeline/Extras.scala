@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.{ConnectedComponents, Local, LocalPaths}
+import graft.runtime.Hybrid
 
 /** Per-component optional outputs of the undirected engine: frames (P6),
   * betweenness (P8), and the directed longest source→mouth (D17).
@@ -23,31 +24,26 @@ object Extras {
 
   /** P6 — frames per component: (comp, line: array<nid>).
     *
-    * HYBRID (the longestSourceMouth pattern): components ≤ `sizeThreshold`
-    * edges run the exact single-task port — byte parity with the pinned
-    * fixtures; bigger components take the scale path instead of round 4's
-    * loud row-cap guard: distributed hull ([[graft.graph.DistHull]]) →
-    * distributed chain contraction keeping the hull nids
-    * ([[graft.graph.DistContract]]) → per-component A* web over the
-    * PILLAR graph only ([[LocalPaths.framesCompressed]]) — task memory
-    * O(contracted component), a 10-30× cut on chain-dominated river
-    * topology, with the identical hull and identical shortest-path
+    * Components up to `sizeThreshold` edges run the exact single-task
+    * port ([[graft.runtime.Hybrid]]) — byte parity with the pinned
+    * fixtures; bigger ones take the scale path: distributed hull
+    * ([[graft.graph.DistHull]]) → distributed chain contraction keeping
+    * the hull nids ([[graft.graph.DistContract]]) → per-component A* web
+    * over the PILLAR graph only ([[LocalPaths.framesCompressed]]) — task
+    * memory O(contracted component), a 10-30× cut on chain-dominated
+    * river topology, with the identical hull and identical shortest-path
     * metric (FramesAtScaleSpec pins scale ≡ local on unique-shortest-path
-    * fixtures and across parallelism levels). The default threshold is
-    * the loud-cap itself, so behaviour changes ONLY where the old code
-    * failed.
+    * fixtures and across parallelism levels).
     */
   def frames(
       edges: DataFrame, nodes: DataFrame, spark: SparkSession,
-      sizeThreshold: Long = Local.MaxLocalGroupRows): DataFrame = {
+      sizeThreshold: Long = Hybrid.MaxLocalGroupRows): DataFrame = {
     import spark.implicits._
     val lab = labelled(edges, nodes)
       .select("comp", "src", "dst", "lat1", "lon1", "lat2", "lon2")
       .localCheckpoint(true)
-    val sizes = lab.groupBy("comp").agg(count(lit(1)).as("n"))
-    val small = lab.join(sizes.filter(col("n") <= sizeThreshold)
-      .select("comp"), Seq("comp"), "left_semi")
-    val localRes = small
+    val split = Hybrid.split("frames", lab, "comp", sizeThreshold)
+    val localRes = split.small(lab)
       .as[(Long, Long, Long, Double, Double, Double, Double)]
       .groupByKey(_._1)
       .flatMapGroups { (comp, rows) =>
@@ -58,10 +54,7 @@ object Extras {
           .zipWithIndex.map { case (line, i) => (comp, i, line) }
       }
       .toDF("comp", "line_idx", "line")
-    val bigComps = sizes.filter(col("n") > sizeThreshold).select("comp")
-    if (bigComps.isEmpty) localRes
-    else localRes.unionByName(framesAtScale(
-      lab.join(bigComps, Seq("comp"), "left_semi"), nodes, spark))
+    split.union(localRes)(framesAtScale(split.big(lab), nodes, spark))
   }
 
   /** The frames scale path over pre-labelled big-component edges
@@ -152,7 +145,7 @@ object Extras {
       maxSamples: Int = 2000,
       minValue: Double = 0.0,
       minFraction: Double = 0.0,
-      sizeThreshold: Long = Local.MaxLocalGroupRows,
+      sizeThreshold: Long = Hybrid.MaxLocalGroupRows,
       labels: Option[DataFrame] = None): DataFrame =
     betweennessGrouped(
       // callers that already hold this edge set's CC labels pass them in
@@ -174,12 +167,12 @@ object Extras {
       maxSamples: Int = 2000,
       minValue: Double = 0.0,
       minFraction: Double = 0.0,
-      sizeThreshold: Long = Local.MaxLocalGroupRows): DataFrame = {
+      sizeThreshold: Long = Hybrid.MaxLocalGroupRows): DataFrame = {
     import spark.implicits._
     import graft.geo.Geo
     val e0 = edges.select("comp", "src", "dst").localCheckpoint(true)
-    // HYBRID gate: every group above the threshold takes the distributed
-    // step-1 contraction (DistContract + simplify) — on trees that is the
+    // Every group above the threshold takes the distributed step-1
+    // contraction (DistContract + simplify) — on trees that is the
     // unpinned Local.compress exactly (DistContractSpec), so the sample
     // universe, pair counts and denominators are unchanged; on CYCLIC
     // groups the reference's contraction is merge-order-dependent
@@ -190,25 +183,18 @@ object Extras {
     // midpoints) — a documented deviation reachable only above the
     // threshold, where the round-4 code failed loudly instead of
     // answering (README deviations list).
-    // ONE canonical distinct, shared: the size gate reads it, and the
-    // scale path feeds it straight into DistContract (which would
-    // otherwise redo the same least/greatest+distinct+checkpoint).
-    // bigGroups is checkpointed because it is read three times (size
-    // gate action, local anti-join, scale semi-join) — uncheckpointed it
-    // re-derived the distinct+groupBy once per consumer.
+    // ONE canonical distinct, shared: the gate counts its non-loop edges
+    // (which materialises the lazy checkpoint), and the scale path feeds
+    // it straight into DistContract (which would otherwise redo the same
+    // least/greatest+distinct+checkpoint).
     val canonAll = e0.select(col("comp"),
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .distinct().localCheckpoint(true)
-    val canonE = canonAll.filter(col("a") =!= col("b"))
-    val bigGroups = canonE.groupBy("comp").agg(count(lit(1)).as("ne"))
-      .filter(col("ne") > sizeThreshold)
-      .select("comp").localCheckpoint(true)
-    val anyBig = bigGroups.limit(1).count() > 0L
-    val localEdges =
-      if (anyBig) e0.join(bigGroups, Seq("comp"), "left_anti") else e0
+      .distinct().localCheckpoint(false)
+    val split = Hybrid.split("betweenness",
+      canonAll.filter(col("a") =!= col("b")), "comp", sizeThreshold)
 
-    val localRes = localEdges
+    val localRes = split.small(e0)
       .join(nodes.select(col("nid").as("src"), col("lat").as("lat1"),
         col("lon").as("lon1")), Seq("src"))
       .join(nodes.select(col("nid").as("dst"), col("lat").as("lat2"),
@@ -238,12 +224,10 @@ object Extras {
       .toDF("comp", "src", "dst", "chain", "value", "value_fraction",
         "value_fraction_max", "comp_max_value")
 
-    if (!anyBig) localRes
-    else localRes.unionByName(betweennessAtScale(
-      canonAll.join(bigGroups, Seq("comp"), "left_semi")
+    split.union(localRes)(betweennessAtScale(
+      split.big(canonAll)
         .select(col("comp"), col("a").as("src"), col("b").as("dst")),
-      nodes, spark, maxSamples, minValue, minFraction,
-      bigGroupsOpt = Some(bigGroups)))
+      nodes, spark, maxSamples, minValue, minFraction, split.keys))
   }
 
   /** Steps 2-5 of the reference betweenness pipeline over an already
@@ -309,7 +293,7 @@ object Extras {
   private def betweennessAtScale(
       big: DataFrame, nodes: DataFrame, spark: SparkSession,
       maxSamples: Int, minValue: Double, minFraction: Double,
-      bigGroupsOpt: Option[DataFrame] = None): DataFrame = {
+      compsOpt: Option[DataFrame]): DataFrame = {
     import spark.implicits._
     // `big` arrives canonical+distinct from the caller's shared frame;
     // no pillars are pinned, and the size gate's comp list seeds the
@@ -319,7 +303,7 @@ object Extras {
         big, Seq.empty[(Long, Long)].toDF("comp", "nid"), spark,
         "P8 betweenness contraction",
         assumeCanonical = true, keepKnownEmpty = true,
-        compsOpt = bigGroupsOpt), spark)
+        compsOpt = compsOpt), spark)
     chainWeighted(contracted, nodes)
       .as[(Long, Long, Long, Seq[Long], Double,
         Double, Double, Double, Double)]
@@ -483,18 +467,17 @@ object Extras {
     * distances — the reference's exact behaviour, replicated not "fixed"),
     * take the max-distance source and rebuild the path.
     *
-    * HYBRID (the upstreamFlowHybrid pattern): components ≤ `sizeThreshold`
-    * edges run the exact local flood in one task each; bigger components
-    * take [[graft.graph.DistLongest]] — the distributed topo-DP +
+    * Components up to `sizeThreshold` edges run the exact local flood in
+    * one task each ([[graft.runtime.Hybrid]]); bigger ones take
+    * [[graft.graph.DistLongest]] — the distributed topo-DP +
     * binary-lifting path, identical values (DistLongestSpec pins
-    * local ≡ distributed on braided fixtures), instead of round 4's loud
-    * row-cap guard.
+    * local ≡ distributed on braided fixtures).
     * @param edges (src, dst, len) DAG
     * @return (mouth, source, dist_m, path)
     */
   def longestSourceMouth(
       edges: DataFrame, spark: SparkSession,
-      sizeThreshold: Long = 2000000L,
+      sizeThreshold: Long = Hybrid.ComponentLocalMax,
       labels: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
     val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"),
@@ -502,12 +485,8 @@ object Extras {
     val weak = labels.getOrElse(
       ConnectedComponents.run(e0.select("src", "dst")).labels)
     val labelled = e0.join(weak.withColumnRenamed("nid", "src"), Seq("src"))
-    val sizes = labelled.groupBy("comp").agg(count(lit(1)).as("n"))
-    val big = labelled.join(sizes.filter(col("n") > sizeThreshold)
-      .select("comp"), Seq("comp"), "left_semi")
-    val small = labelled.join(sizes.filter(col("n") <= sizeThreshold)
-      .select("comp"), Seq("comp"), "left_semi")
-    val localRes = small
+    val split = Hybrid.split("longest_source_mouth", labelled, "comp", sizeThreshold)
+    val localRes = split.small(labelled)
       .select("comp", "src", "dst", "len")
       .as[(Long, Long, Long, Double)]
       .groupByKey(_._1)
@@ -536,9 +515,7 @@ object Extras {
         }
       }
       .toDF("mouth", "source", "dist_m", "path")
-    if (big.isEmpty) localRes
-    else localRes.unionByName(
-      graft.graph.DistLongest.longestSourceMouth(
-        big.select("src", "dst", "len"), spark))
+    split.union(localRes)(graft.graph.DistLongest.longestSourceMouth(
+      split.big(labelled).select("src", "dst", "len"), spark))
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.graph.{ConnectedComponents, GraphBuild, Local}
 import graft.geo.Geo
 import graft.outputs.GeoJson
+import graft.runtime.Hybrid
 import graft.tagfilter.{TagFilter, TagFilterCompiler, TagFilterFunc}
 
 /** The flagship undirected "lump" pipeline (SURVEY.md §3.1, §7.3):
@@ -72,7 +73,7 @@ object LumpWays {
       // every sane component on the exact single-task path; the peel
       // decomposition is within the reference's contract either way (its
       // into_lines_random walk is unseeded-RNG).
-      shardThresholdEdges: Long = 2000000L)
+      shardThresholdEdges: Long = Hybrid.ComponentLocalMax)
 
   /** Composite (group id, node id) packed into one Long for the CC key —
     * group graphs are independent (SURVEY C1: a node can sit in different
@@ -241,13 +242,8 @@ object LumpWays {
     // unshardable, so it always takes the single-task path
     val shardAt =
       if (cfg.splitIntoSinglePaths) Long.MaxValue else cfg.shardThresholdEdges
-    val bigComps = keptEdges.groupBy("comp").agg(count(lit(1)).as("ne"))
-      .filter(col("ne") > shardAt)
-      .select("comp").localCheckpoint(true)
-    val anyBig = bigComps.limit(1).count() > 0L
-    val smallEdges =
-      if (anyBig) keptEdges.join(bigComps, Seq("comp"), "left_anti") else keptEdges
-    val chain = smallEdges
+    val split = Hybrid.split("lump.geometry", keptEdges, "comp", shardAt)
+    val chain = split.small(keptEdges)
       .withColumn("chain", concat(array(col("src")), col("inter"), array(col("dst"))))
       .select(col("comp"), col("src"), col("dst"), posexplode(col("chain")).as(Seq("pos", "nid")))
       .join(nodes, Seq("nid"))
@@ -314,8 +310,8 @@ object LumpWays {
     // LineString feature carrying the group props — the documented scale
     // deviation from the one-MultiLineString-per-group shape (whose
     // single row is itself O(component))
-    val geoms = if (!anyBig) geomsSmall else {
-      val bigEdges = keptEdges.join(bigComps, Seq("comp"), "left_semi")
+    val geoms = split.union(geomsSmall) {
+      val bigEdges = split.big(keptEdges)
       val perEdge = bigEdges
         .withColumn("chain", concat(array(col("src")), col("inter"), array(col("dst"))))
         .select(col("comp"), col("src"), col("dst"),
@@ -334,7 +330,7 @@ object LumpWays {
         graft.graph.DistPeel.withChunk(perEdge, shardAt), spark)
       val numNodesBig = graft.graph.GraphBuild.compressedNumNodes(
         bigEdges.select("comp", "src", "dst"))
-      val geomsBig = segs
+      segs
         .join(numNodesBig, Seq("comp"))
         .select(col("comp"),
           array(col("nids")).as("lines"),
@@ -345,7 +341,6 @@ object LumpWays {
           lit(-1).as("path_idx"),
           array().cast("array<bigint>").as("vertices"),
           col("line_idx"), col("seg_idx"))
-      geomsSmall.union(geomsBig)
     }
 
     val joined = withRanks.join(geoms, Seq("comp"))
@@ -363,14 +358,13 @@ object LumpWays {
         .distinct()
       val smallVerts = geoms
         .select(col("comp"), explode(col("vertices")).as("nid"))
-      val bigVerts = if (!anyBig) smallVerts.limit(0) else {
-        val be = keptEdges.join(bigComps, Seq("comp"), "left_semi")
+      val wayIds = split.union(smallVerts) {
+        val be = split.big(keptEdges)
         be.select(col("comp"), col("src").as("nid"))
           .union(be.select(col("comp"), col("dst").as("nid")))
           .groupBy("comp", "nid").agg(count(lit(1)).as("d"))
           .filter(col("d") =!= 2).select("comp", "nid")
-      }
-      val wayIds = smallVerts.union(bigVerts).distinct()
+      }.distinct()
         .join(nidWays, Seq("nid"))
         .groupBy("comp")
         .agg(sort_array(collect_set(col("wid"))).as("all_wayids"))

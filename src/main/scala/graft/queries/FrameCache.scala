@@ -64,7 +64,7 @@ object FrameCache {
   /** Delete `root` and everything under it; symlinks are deleted, never
     * followed. Best effort: a temp file that cannot be deleted is left
     * behind rather than failing the query that made it. */
-  private[queries] def deleteTree(root: Path): Unit = try {
+  private[graft] def deleteTree(root: Path): Unit = try {
     if (Files.isDirectory(root, LinkOption.NOFOLLOW_LINKS)) {
       val ls = Files.list(root)
       try ls.forEach(p => deleteTree(p)) finally ls.close()

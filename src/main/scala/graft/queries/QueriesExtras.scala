@@ -98,7 +98,7 @@ object QueriesExtras {
     // degree-2 vertex in the compressed graph, which a clean contraction
     // never has.
     "q45_betweenness" -> ((s, d) =>
-      betweennessReplayable(s, d, graft.graph.Local.MaxLocalGroupRows)),
+      betweennessReplayable(s, d, graft.runtime.Hybrid.MaxLocalGroupRows)),
 
     // D17 longest source→mouth per basin (weak CC of the DAG orientation
     // ≡ the canonical undirected CC — reuse the memoised labels)

@@ -3,6 +3,7 @@ package graft.web
 import scala.collection.mutable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.runtime.Hybrid
 
 /** Link-graph centrality for crawl prioritization / quality weighting —
   * the web-pipeline op that ranks pages (or hosts) by incoming links
@@ -48,42 +49,13 @@ object LinkGraph {
       .where(col("src") =!= col("dst"))
       .distinct()
 
-  /** Bounded k-core peel — the spam-farm / link-ring robustness signal
-    * (a page's coreness is the densest subgraph level it survives in;
-    * web-spam and boilerplate nav rings peel early). `rounds` fixed
-    * peel rounds at threshold `k` over the undirected graph: each round
-    * removes every still-active node with fewer than `k` active
-    * neighbours, exactly the standard distributed k-core round.
-    *
-    * Returns one row per node: `removed_round` (1-based round the node
-    * was peeled; 0 = survives all rounds — a k-core member once the
-    * peel has converged) and `deg_final` (degree among survivors;
-    * 0 for peeled nodes). All integers, so DuckDB replays the rounds
-    * bit-for-bit as unrolled CTEs.
-    *
-    * Scale shape: round 1 pays the one full-degree groupBy over E;
-    * every later round is FRONTIER-SIZED — only edges incident to the
-    * just-removed set are touched (a semi-join no bigger than the
-    * frontier's incident edges), and the state update joins O(V) rows
-    * against the frontier delta. The state frame is localCheckpointed
-    * per round so lineage stays flat, and superseded generations are
-    * released ([[graft.runtime.CheckpointGen]]) so resident state is
-    * O(1) generations, not O(rounds).
-    */
-  /** Single-task replay gate for the fixed-round loops below (k-core,
-    * LPA, BFS, HyperBall): at or below this many nodes AND edges the
-    * whole graph fits one task, and each loop replays its EXACT
-    * per-round integer semantics locally — identical outputs with ~2
-    * driver round-trips instead of 2-3 per round of checkpoint latency
-    * (guide §2.4; the same hybrid contract as ConnectedComponents'
-    * local union-find). The node count gates first (a cheap count) so
-    * an at-scale caller never pays the edge-count scan.
-    */
-  private val LocalMaxEdges: Long =
-    sys.env.get("SPARK_GRAFT_WEB_LOCAL_MAX").map(_.toLong).getOrElse(500000L)
-
-  /** The one-partition tagged (nodes ++ edges) dataset the local paths
-    * replay from — None when the graph is above the gate. Rows:
+  /** The one-partition tagged (nodes ++ edges) dataset the fixed-round
+    * loops below (k-core, LPA, BFS, HyperBall) replay their exact
+    * per-round integer semantics from — None when the graph is above the
+    * gate (at most `localMax` nodes AND edges, see
+    * [[graft.runtime.Hybrid]]). The node count gates first (a cheap
+    * count); the edge count reads at most `localMax + 1` rows per
+    * partition, and only a graph that passes both is checkpointed. Rows:
     * (isNode, a, b) with node rows (true, nid, 0) and edge rows
     * (false, src, dst).
     */
@@ -92,15 +64,15 @@ object LinkGraph {
       : Option[org.apache.spark.sql.Dataset[(Boolean, Long, Long)]] = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    if (localMax < 0 || nodes.count() > localMax) return None
-    val e0 = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .localCheckpoint(true)
-    if (e0.count() > localMax) return None
+    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    if (!Hybrid.local("linkgraph.nodes", localMax)(nodes.count()) ||
+        !Hybrid.local("linkgraph.edges", localMax)(
+          e0.limit(math.min(localMax, Int.MaxValue - 1L).toInt + 1).count()))
+      return None
     Some(nodes
       .select(lit(true).as("n"), col("doc_id").cast("long").as("a"),
         lit(0L).as("b"))
-      .unionByName(e0.select(lit(false).as("n"), col("src").as("a"),
+      .unionByName(e0.localCheckpoint(false).select(lit(false).as("n"), col("src").as("a"),
         col("dst").as("b")))
       .as[(Boolean, Long, Long)]
       .coalesce(1)) // narrow (no exchange): the one-task gate is the point
@@ -131,10 +103,32 @@ object LinkGraph {
     adj
   }
 
+  /** Bounded k-core peel — the spam-farm / link-ring robustness signal
+    * (a page's coreness is the densest subgraph level it survives in;
+    * web-spam and boilerplate nav rings peel early). `rounds` fixed
+    * peel rounds at threshold `k` over the undirected graph: each round
+    * removes every still-active node with fewer than `k` active
+    * neighbours, exactly the standard distributed k-core round.
+    *
+    * Returns one row per node: `removed_round` (1-based round the node
+    * was peeled; 0 = survives all rounds — a k-core member once the
+    * peel has converged) and `deg_final` (degree among survivors;
+    * 0 for peeled nodes). All integers, so DuckDB replays the rounds
+    * bit-for-bit as unrolled CTEs.
+    *
+    * Scale shape: round 1 pays the one full-degree groupBy over E;
+    * every later round is FRONTIER-SIZED — only edges incident to the
+    * just-removed set are touched (a semi-join no bigger than the
+    * frontier's incident edges), and the state update joins O(V) rows
+    * against the frontier delta. The state frame is localCheckpointed
+    * per round so lineage stays flat, and superseded generations are
+    * released ([[graft.runtime.CheckpointGen]]) so resident state is
+    * O(1) generations, not O(rounds).
+    */
   def kcorePeel(
       nodes: DataFrame, edges: DataFrame,
       k: Int = 3, rounds: Int = 4,
-      localMaxEdges: Long = LocalMaxEdges): DataFrame = {
+      localMaxEdges: Long = Hybrid.LinkGraphLocalMax): DataFrame = {
     require(k >= 1 && rounds >= 1, s"k and rounds must be >= 1; got $k, $rounds")
     val spark = nodes.sparkSession
     import spark.implicits._
@@ -221,7 +215,7 @@ object LinkGraph {
     */
   def labelPropagation(
       nodes: DataFrame, edges: DataFrame, rounds: Int = 3,
-      localMaxEdges: Long = LocalMaxEdges): DataFrame = {
+      localMaxEdges: Long = Hybrid.LinkGraphLocalMax): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1; got $rounds")
     val spark = nodes.sparkSession
     import spark.implicits._
@@ -291,7 +285,7 @@ object LinkGraph {
   def bfsDepth(
       nodes: DataFrame, edges: DataFrame,
       seedMod: Long = 97L, rounds: Int = 3,
-      localMaxEdges: Long = LocalMaxEdges): DataFrame = {
+      localMaxEdges: Long = Hybrid.LinkGraphLocalMax): DataFrame = {
     require(seedMod >= 1 && rounds >= 1,
       s"seedMod and rounds must be >= 1; got $seedMod, $rounds")
     val spark = nodes.sparkSession
@@ -491,7 +485,7 @@ object LinkGraph {
   def hyperBallRegisters(
       nodes: DataFrame, edges: DataFrame,
       m: Int = 16, rounds: Int = 2,
-      localMaxEdges: Long = LocalMaxEdges): DataFrame = {
+      localMaxEdges: Long = Hybrid.LinkGraphLocalMax): DataFrame = {
     require(m >= 2 && m % 2 == 0, s"m must be even and >= 2; got $m")
     val spark = nodes.sparkSession
     import spark.implicits._
