@@ -1,24 +1,37 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable.LongMap
 import graft.runtime.Hybrid
 
-/** Iterative connected components in DataFrame joins — the alternating
-  * large-star / small-star algorithm of Kiveris et al., "Connected
-  * Components in MapReduce and Beyond" (SoCC 2014); "Finding connected
-  * components in map-reduce in logarithmic rounds" (ICDE 2013, PAPERS.md),
-  * which analyses Hash-to-Min, is background. Replaces the
-  * reference's in-memory BFS flood fill
+/** Iterative connected components — the alternating large-star /
+  * small-star algorithm of Kiveris et al., "Connected Components in
+  * MapReduce and Beyond" (SoCC 2014); "Finding connected components in
+  * map-reduce in logarithmic rounds" (ICDE 2013, PAPERS.md), which
+  * analyses Hash-to-Min, is background. Replaces the reference's
+  * in-memory BFS flood fill
   * (/root/reference/src/graph/undirected_graph.rs:346-380) with an
   * O(log² n)-round shuffle algorithm that survives planet-scale inputs.
   *
-  * Each round is two self-aggregating joins; lineage is truncated with
-  * `localCheckpoint` every round (or durable checkpoints via
-  * [[graft.runtime.IterationCheckpointer]] for resumability). The fixpoint
-  * test is an order-independent XOR-fingerprint + count of the edge set —
-  * one cheap aggregate per round instead of a full `except`.
+  * Each round (large-star then small-star) is ONE Spark job of three
+  * shuffles over RDD pairs on one shared [[Flow.loopPartitioner]]: the
+  * symmetric edges keyed by node, large-star's output keyed by its `src`,
+  * and the `distinct` of small-star's output. Each star reads its
+  * shuffled partition twice (`zipPartitions` with itself): once into a
+  * per-partition `LongMap` of neighbourhood minima, once to re-point the
+  * edges — no per-key value buffers, although a converged root's
+  * neighbourhood is its whole component. RDDs, not DataFrames: AQE
+  * submits every exchange as its own job, ~10 per DataFrame round.
+  *
+  * Lineage is truncated with `localCheckpoint` every round (or durable
+  * checkpoints via [[graft.runtime.IterationCheckpointer]] for
+  * resumability, one `(src, dst)` frame per round). The fixpoint test is
+  * an order-independent count + XOR fingerprint of the edge set, and that
+  * same action materialises the round's checkpoint.
   *
   * Output label = **min nid of the component**, matching the reference's
   * BTreeMap-first `root_nodeid` (/root/reference/src/way_group.rs:27-36).
@@ -30,8 +43,9 @@ object ConnectedComponents {
 
   /** @param edges DataFrame with two Long columns `src`, `dst` (undirected,
     *              self-loops/duplicates tolerated).
+    * @param maxRounds star rounds allowed before the run fails loudly.
     * @param checkpointer optional durable per-round checkpoint hook
-    *                     (round, labelsOrEdges) => possibly-reloaded frame.
+    *                     (round, edges) => possibly-reloaded frame.
     * @param localMaxEdges edge sets up to this size run [[localLabels]],
     *                      one union-find task, instead of the star loop
     *                      (see [[graft.runtime.Hybrid]]; 0 forces the loop —
@@ -44,56 +58,53 @@ object ConnectedComponents {
       checkpointer: Option[(Int, DataFrame) => DataFrame] = None,
       assumeDistinct: Boolean = false,
       localMaxEdges: Long = Hybrid.CcLocalMax): Result = {
+    val spark = edges.sparkSession
+    import spark.implicits._
 
     // assumeDistinct: callers holding an already-canonical edge set (the
     // memoised distinct frames, contraction outputs) skip the redundant
-    // full-shuffle distinct; the lazy checkpoint is materialized by the
-    // fingerprint aggregate in the same job (one round-trip, not two).
+    // full-shuffle distinct. Every checkpoint below is lazy: the
+    // fingerprint touches every partition, so it materialises the
+    // checkpoint in the same job.
     val e0 = edges
       .select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
-    var e = (if (assumeDistinct) e0 else e0.distinct()).localCheckpoint(false)
+      .as[(Long, Long)].rdd
+    var e = (if (assumeDistinct) e0 else e0.distinct()).localCheckpoint()
 
-    var rounds = 0
     var prev = fingerprint(e)
     // the fingerprint already counted the edge set (no extra job).
     // Durable checkpointers stay iterative (their resume contract is the
     // loop).
     if (checkpointer.isEmpty && Hybrid.local("cc", localMaxEdges)(prev._1))
-      return Result(localLabels(e), 0)
-    var done = false
+      return Result(localLabels(e.toDF("src", "dst")), 0)
 
+    val part = Flow.loopPartitioner(spark, prev._1)
+    var rounds = 0
+    var done = false
     while (!done && rounds < maxRounds) {
-      // NOTE (r6 measurement): batching TWO star rounds per driver
-      // round-trip was tried to cut checkpoint+fingerprint latency and
-      // is strictly SLOWER (q13 5.0→8.9 s, q40 4.0→6.9 s at sf0.1):
-      // both stars reference their input twice (self-union), so an
-      // un-checkpointed inner round is recomputed once per branch —
-      // the per-round checkpoint is what makes the self-unions cheap.
-      val ss = smallStar(largeStar(e))
-      // LAZY checkpoint: the fingerprint aggregate touches every
-      // partition, so it materializes the checkpoint in the same job —
-      // one driver round-trip per round instead of two (the eager form's
-      // count job + the fingerprint job). Durable checkpointers keep
-      // their own materialization contract.
+      val ss = starRound(e, part)
       val next = checkpointer match {
-        case Some(cp) => cp(rounds, ss)
-        case None     => ss.localCheckpoint(false)
+        case Some(cp) => cp(rounds, ss.toDF("src", "dst")).as[(Long, Long)].rdd
+        case None     => ss.localCheckpoint()
       }
       val fp = fingerprint(next)
+      e.unpersist(blocking = false) // `next` no longer reads it
       done = fp == prev
       prev = fp
       e = next
       rounds += 1
     }
+    if (!done)
+      throw new IllegalStateException(
+        s"connected components did not converge in $rounds rounds " +
+          s"(${prev._1} edges left) — raise maxRounds")
 
     // Converged edge set is a star forest: (child, root) with root = min.
-    val roots = e.select(col("dst").as("nid"), col("dst").as("comp")).distinct()
     val labels = e
-      .select(col("src").as("nid"), col("dst").as("comp"))
-      .union(roots)
-      .groupBy("nid")
-      .agg(min("comp").as("comp"))
+      .flatMap { case (s, d) => Iterator((s, d), (d, d)) }
+      .reduceByKey(part, (a, b) => math.min(a, b))
+      .toDF("nid", "comp")
     Result(labels, rounds)
   }
 
@@ -110,38 +121,28 @@ object ConnectedComponents {
       .select(col("nid"), coalesce(col("comp"), col("nid")).as("comp"))
   }
 
-  /** Large-star: every strictly-larger neighbour of u re-points at the
-    * minimum of u's closed neighbourhood.
-    */
-  private[graph] def largeStar(e: DataFrame): DataFrame = {
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-    val mins = sym
-      .groupBy("src")
-      .agg(least(col("src"), min(col("dst"))).as("m"))
-      .withColumnRenamed("src", "u")
-    sym
-      .filter(col("dst") > col("src"))
-      .join(mins, col("src") === col("u"))
-      .select(col("dst").as("src"), col("m").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    // no distinct here: the following small-star groupBy absorbs
-    // duplicates — one fewer shuffle per round
+  /** One large-star + small-star round: three shuffles, no action. */
+  private def starRound(e: RDD[(Long, Long)], part: HashPartitioner): RDD[(Long, Long)] = {
+    // large-star: every strictly-larger neighbour of u re-points at the
+    // minimum of u's closed neighbourhood; the output is oriented (src > dst)
+    val sym = e.flatMap { case (s, d) => Iterator((s, d), (d, s)) }.partitionBy(part)
+    val large = sym.zipPartitions(sym) { (scan, edges) =>
+      val m = closedMins(scan)
+      edges.collect { case (u, v) if v > u => (v, m(u)) }
+    }.partitionBy(part)
+    // small-star: every smaller neighbour of u, and u itself, re-points at
+    // the minimum of u's smaller neighbourhood
+    large.zipPartitions(large) { (scan, edges) =>
+      val m = closedMins(scan)
+      edges.collect { case (u, v) if v != m(u) => (v, m(u)) } ++ m.iterator
+    }.distinct(part.numPartitions)
   }
 
-  /** Small-star: every ≤-neighbour (and u itself) re-points at the
-    * minimum of u's smaller neighbourhood.
-    */
-  private[graph] def smallStar(e: DataFrame): DataFrame = {
-    val dir = e.select(
-      greatest(col("src"), col("dst")).as("u"),
-      least(col("src"), col("dst")).as("v"))
-    val mins = dir.groupBy("u").agg(min(col("v")).as("m"))
-    dir
-      .join(mins, "u")
-      .select(col("v").as("src"), col("m").as("dst"))
-      .union(mins.select(col("u").as("src"), col("m").as("dst")))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
+  /** Per-key minimum of the key and its values, over one partition. */
+  private def closedMins(it: Iterator[(Long, Long)]): LongMap[Long] = {
+    val m = LongMap.empty[Long]
+    it.foreach { case (u, v) => m(u) = math.min(m.getOrElse(u, u), v) }
+    m
   }
 
   /** Single-task min-label union-find over a (checkpointed) small edge
@@ -158,7 +159,7 @@ object ConnectedComponents {
     e.select(col("src"), col("dst")).as[(Long, Long)]
       .coalesce(1) // narrow (no exchange): the one-task gate is the point
       .mapPartitions { it =>
-        val parent = scala.collection.mutable.LongMap.empty[Long]
+        val parent = LongMap.empty[Long]
         def find(x0: Long): Long = {
           var r = x0
           while (parent.getOrElse(r, r) != r) r = parent(r)
@@ -182,14 +183,12 @@ object ConnectedComponents {
       .localCheckpoint(false)
   }
 
-  /** Order-independent fingerprint of an edge set: (count, xor of row
-    * hashes). One aggregate; no sort, no except.
+  /** Order-independent fingerprint of an edge set: (count, xor of the
+    * rows' `xxhash64(src, dst)`). One fold; no sort, no except, and no
+    * `reduce`, which throws on an empty set.
     */
-  private def fingerprint(e: DataFrame): (Long, Long) = {
-    val row = e
-      .agg(count(lit(1)).as("c"),
-        coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L)).as("x"))
-      .head()
-    (row.getLong(0), row.getLong(1))
-  }
+  private def fingerprint(e: RDD[(Long, Long)]): (Long, Long) =
+    e.aggregate((0L, 0L))(
+      { case ((c, x), (s, d)) => (c + 1L, x ^ XXH64.hashLong(d, XXH64.hashLong(s, 42L))) },
+      { case ((c1, x1), (c2, x2)) => (c1 + c2, x1 ^ x2) })
 }

@@ -173,11 +173,19 @@ object Flow {
     upstreamFlow(edges.withColumn("tag", lit(null).cast("string")),
       maxRounds, checkpointer)
 
-  /** Shared setup of the Pregel-style RDD loops: a partitioner sized to
-    * the data (AQE cannot coalesce inside an RDD loop) — ~100k edges per
+  /** The one partitioner of an RDD loop over `rows` records, sized to the
+    * data (AQE cannot coalesce inside an RDD loop): ~100k rows per
     * partition, capped at the session's shuffle parallelism, so small
     * graphs take 1-2 partitions per round instead of `shuffle.partitions`
-    * empty tasks × rounds — and whether reliable checkpoints are
+    * empty tasks × rounds. Also sizes [[ConnectedComponents.run]]'s loop.
+    */
+  private[graph] def loopPartitioner(spark: SparkSession, rows: Long): HashPartitioner =
+    new HashPartitioner(math.max(1L, math.min(
+      spark.conf.get("spark.sql.shuffle.partitions", "32").toLong,
+      rows / 100000L + 1L)).toInt)
+
+  /** Shared setup of Flow's Pregel-style RDD loops: the
+    * [[loopPartitioner]] and whether reliable checkpoints are
     * available. Reliable checkpoints need a SHARED path on a real
     * cluster (a driver-local path is invisible to remote executors), so
     * only local mode defaults to a temp dir, deleted when the SparkContext
@@ -188,9 +196,7 @@ object Flow {
   private def rddLoopSetup(edges: DataFrame): (HashPartitioner, Boolean) = {
     val spark = edges.sparkSession
     val sc = spark.sparkContext
-    val nParts = math.max(1L, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toLong,
-      edges.count() / 100000L + 1L)).toInt
+    val part = loopPartitioner(spark, edges.count())
     if (sc.getCheckpointDir.isEmpty && sc.isLocal) {
       val dir = Files.createTempDirectory("graft-rdd-ckpt")
       sc.setCheckpointDir(dir.toString)
@@ -199,7 +205,7 @@ object Flow {
           graft.queries.FrameCache.deleteTree(dir)
       })
     }
-    (new HashPartitioner(nParts), sc.getCheckpointDir.nonEmpty)
+    (part, sc.getCheckpointDir.nonEmpty)
   }
 
   /** D5 — upstream accumulation over a DAG with the full splitting rule.

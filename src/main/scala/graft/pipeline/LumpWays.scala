@@ -204,7 +204,8 @@ object LumpWays {
       case Some(n) => afterMax.orderBy(col("length_m").desc, col("comp").asc).limit(n)
       case None    => afterMax
     }
-    val kept = trunc.localCheckpoint(true)
+    // no filter and no top-N: `trunc` is `lens`, already checkpointed
+    val kept = if (trunc eq lens) lens else trunc.localCheckpoint(true)
 
     val totals = kept.agg(
       sum("length_m").as("tot"), max("length_m").as("longest"),

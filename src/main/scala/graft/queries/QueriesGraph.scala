@@ -29,7 +29,7 @@ object QueriesGraph {
         count(lit(1)).as("n_nodes"))
     }),
 
-    // C2 connected components — large-star/small-star iterative joins
+    // C2 connected components — large-star/small-star rounds
     "q13_cc_labels" -> ((s, d) => ccLabels(s, d)),
 
     // C5 per-component length: Σ haversine over contracted edges
